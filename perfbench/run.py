@@ -49,6 +49,24 @@ def _loadavg() -> str:
         return "n/a"
 
 
+def _cpu_times() -> list[int]:
+    """The aggregate ``cpu`` line of /proc/stat (jiffies); [] elsewhere."""
+    try:
+        with open("/proc/stat") as f:
+            return [int(x) for x in f.readline().split()[1:]]
+    except (OSError, ValueError):
+        return []
+
+
+def _steal_share(before: list[int], after: list[int]) -> str:
+    """Share of CPU time the hypervisor stole between two samples: the
+    co-tenant load that loadavg does not show."""
+    if len(before) < 8 or len(after) < 8:
+        return "n/a"
+    delta = [b - a for a, b in zip(before, after)]
+    return f"{delta[7] / max(1, sum(delta[:8])):.3f}"
+
+
 def _rss_mb(pid: int) -> float:
     try:
         with open(f"/proc/{pid}/status") as f:
@@ -82,12 +100,15 @@ def _session(cpus: int, trace: bool):
 
 def _jvm_args(work: str) -> None:
     """JVM launch options: temp, warehouse and Derby paths inside the
-    work dir, a smaller heap than the package default, no console
-    progress bar, and an ephemeral UI port when the UI is on."""
+    work dir, no perf-data file (HotSpot keeps it in /tmp whatever
+    java.io.tmpdir says), a smaller heap than the package default, no
+    console progress bar, and an ephemeral UI port when the UI is on."""
     tmp = os.environ["TMPDIR"]
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "2g")
+    os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"
     os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([
-        "--driver-java-options", shlex.quote(f"-Djava.io.tmpdir={tmp} -Dderby.system.home={tmp}"),
+        "--driver-java-options",
+        shlex.quote(f"-XX:-UsePerfData -Djava.io.tmpdir={tmp} -Dderby.system.home={tmp}"),
         "--conf", shlex.quote(f"spark.sql.warehouse.dir={os.path.join(work, 'warehouse')}"),
         "--conf", "spark.ui.showConsoleProgress=false",
         "--conf", "spark.ui.port=0",
@@ -149,6 +170,7 @@ def main(argv: list[str] | None = None) -> int:
     nproc = os.cpu_count() or 1
     cpus = min(4, nproc)
     load_start = _loadavg()
+    cpu_start = _cpu_times()
     work = os.path.join(ROOT, ".perfbench_work", f"{args.workload}-{args.seed}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
@@ -192,9 +214,11 @@ def main(argv: list[str] | None = None) -> int:
         wl.check()
         phase("checked")
         load_end = _loadavg()
+        steal = _steal_share(cpu_start, _cpu_times())
 
         report = end_to_end(wl, ops, setup_times, peak)
         print(f"noise: nproc={nproc} N={cpus} loadavg_start={load_start} loadavg_end={load_end} "
+              f"cpu_steal={steal} "
               f"ops={len(ops)} op_spread={_spread([o.wall for o in ops])} "
               f"op_walls={[round(o.wall, 3) for o in ops]}")
         for name, (value, unit) in report.items():
