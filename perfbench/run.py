@@ -6,11 +6,13 @@ Usage (from the repository root):
 
 One process, one closed-loop client, ``local[N]`` with N = min(4, nproc).
 The run generates its inputs from ``--seed`` (untimed), sets the session
-up three times (timed; the third session is kept), runs one untimed
-warm-up operation, then runs operations until ``--seconds`` have passed,
+up five times (timed; the last session is kept), runs two untimed
+warm-up operations, then runs operations until ``--seconds`` have
+passed,
 checks every output, and prints:
 
-* a noise record (nproc, N, loadavg at start and end);
+* a noise record (nproc, N, loadavg at start and end, CPU steal, and
+  each timed operation's wall and CPU seconds);
 * every metric the workload defines, by name with its unit;
 * as the last line, one JSON object ``{correct, attempted, failed,
   metrics}``. With ``--trace 0`` the metrics are the end-to-end ones in
@@ -36,9 +38,14 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-SETUPS = 3
+SETUPS = 5
+#: untimed operations before the window (indices -WARMUPS .. -1): an
+#: operation's CPU seconds still fall by 10-15 % from a JVM's first timed
+#: operation to its second (C1 compiles, codegen and plan caches, G1
+#: cycles), so one warm-up is not enough
+WARMUPS = 2
 #: the end-to-end metrics BENCHMARK.json bounds (the JSON line of --trace 0)
-BOUNDED = ("setup_s", "op_s_p50", "rows_per_s")
+BOUNDED = ("setup_s", "op_cpu_s_p50", "rows_per_cpu_s")
 
 
 def _loadavg() -> str:
@@ -65,6 +72,34 @@ def _steal_share(before: list[int], after: list[int]) -> str:
         return "n/a"
     delta = [b - a for a, b in zip(before, after)]
     return f"{delta[7] / max(1, sum(delta[:8])):.3f}"
+
+
+def tree_cpu_s(root: int | None = None) -> float:
+    """CPU seconds (user + system) used so far by process ``root`` (this
+    one by default) and every descendant: the driver JVM and the Python
+    workers it forks. Children that already exited count through their
+    parent's cumulative fields. Time the hypervisor stole is not in it."""
+    root = os.getpid() if root is None else root
+    parent, used = {}, {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except (OSError, IndexError):
+            continue  # exited while we looked
+        pid = int(entry)
+        parent[pid] = int(fields[1])
+        used[pid] = sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
+    total = 0
+    for pid, ticks in used.items():
+        p = pid
+        while p in parent and p != root:
+            p = parent[p]
+        if p == root:
+            total += ticks
+    return total / os.sysconf("SC_CLK_TCK")
 
 
 def _rss_mb(pid: int) -> float:
@@ -101,14 +136,20 @@ def _session(cpus: int, trace: bool):
 def _jvm_args(work: str) -> None:
     """JVM launch options: temp, warehouse and Derby paths inside the
     work dir, no perf-data file (HotSpot keeps it in /tmp whatever
-    java.io.tmpdir says), a smaller heap than the package default, no
-    console progress bar, and an ephemeral UI port when the UI is on."""
+    java.io.tmpdir says), the C1 JIT only, a smaller heap than the
+    package default, no console progress bar, and an ephemeral UI port
+    when the UI is on.
+
+    C1 only: a run lives about a minute, and with C2 on, its background
+    compiles add 6-10 CPU seconds, unevenly, to the first timed
+    operations (measured on ``tick_fanout``); with C1 alone a run comes
+    close to its steady state within the warm-up operations."""
     tmp = os.environ["TMPDIR"]
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "2g")
     os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"
     os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([
         "--driver-java-options",
-        shlex.quote(f"-XX:-UsePerfData -Djava.io.tmpdir={tmp} -Dderby.system.home={tmp}"),
+        shlex.quote(f"-XX:-UsePerfData -XX:TieredStopAtLevel=1 -Djava.io.tmpdir={tmp} -Dderby.system.home={tmp}"),
         "--conf", shlex.quote(f"spark.sql.warehouse.dir={os.path.join(work, 'warehouse')}"),
         "--conf", "spark.ui.showConsoleProgress=false",
         "--conf", "spark.ui.port=0",
@@ -119,23 +160,26 @@ def _jvm_args(work: str) -> None:
 def setup(workload, cpus: int, trace: bool):
     """Session build + package ship + first footer read, ``SETUPS``
     times (the first one also launches the JVM). Returns the kept
-    session, the set-up walls, and the (build, first read) parts."""
-    times, builds, reads = [], [], []
+    session, the set-up walls and CPU seconds, and the (build, first
+    read) walls."""
+    times, cpus_used, builds, reads = [], [], [], []
     spark = None
     for i in range(SETUPS):
         if spark is not None:
             spark.stop()
+        c0 = tree_cpu_s()
         t0 = time.perf_counter()
         spark = _session(cpus, trace)
         t1 = time.perf_counter()
         spark.read.parquet(os.path.join(workload.sf_dir, "events.parquet")).schema
         t2 = time.perf_counter()
+        cpus_used.append(tree_cpu_s() - c0)
         times.append(t2 - t0)
         builds.append(t1 - t0)
         reads.append(t2 - t1)
         if i == 0:
             spark.sparkContext.setLogLevel("ERROR")
-    return spark, times, (builds, reads)
+    return spark, times, cpus_used, (builds, reads)
 
 
 T0 = time.perf_counter()
@@ -182,7 +226,7 @@ def main(argv: list[str] | None = None) -> int:
         phase("start")
         wl.generate()
         phase("inputs generated")
-        spark, setup_times, setup_parts = setup(wl, cpus, bool(args.trace))
+        spark, setup_times, setup_cpu, setup_parts = setup(wl, cpus, bool(args.trace))
         phase("set up")
         jvm_pid = spark.sparkContext._gateway.proc.pid
         wl.start(spark)
@@ -192,8 +236,9 @@ def main(argv: list[str] | None = None) -> int:
         def sample_rss() -> float:
             return _rss_mb(jvm_pid) + _rss_mb(os.getpid())
 
-        warm = wl.op(-1)  # warm-up: JIT, codegen, Python workers
-        phase(f"warmed up ({warm.wall:.2f}s; items {[round(x, 2) for x in warm.items]})")
+        for k in range(WARMUPS, 0, -1):  # warm-up: JIT, codegen, Python workers
+            warm = wl.op(-k)
+            phase(f"warm-up op {-k} ({warm.wall:.2f}s; items {[round(x, 2) for x in warm.items]})")
         peak = sample_rss()
         if tracer is not None:
             # untraced half first (same session), then the traced half
@@ -216,11 +261,14 @@ def main(argv: list[str] | None = None) -> int:
         load_end = _loadavg()
         steal = _steal_share(cpu_start, _cpu_times())
 
-        report = end_to_end(wl, ops, setup_times, peak)
+        report = end_to_end(wl, ops, setup_times, setup_cpu, peak)
         print(f"noise: nproc={nproc} N={cpus} loadavg_start={load_start} loadavg_end={load_end} "
               f"cpu_steal={steal} "
               f"ops={len(ops)} op_spread={_spread([o.wall for o in ops])} "
-              f"op_walls={[round(o.wall, 3) for o in ops]}")
+              f"op_walls={[round(o.wall, 3) for o in ops]} "
+              f"op_cpu_s={[round(o.cpu, 2) for o in ops]} "
+              f"setup_walls={[round(x, 3) for x in setup_times]} "
+              f"setup_cpu_s={[round(x, 2) for x in setup_cpu]}")
         for name, (value, unit) in report.items():
             print(f"metric {args.workload} {name} = {value} {unit}")
         for f in wl.failures:
@@ -274,7 +322,9 @@ def run_window(wl, seconds: float, sample_rss, start_index: int, tracer) -> list
     ):
         if tracer is not None:
             tracer.run = i
+        c0 = tree_cpu_s()
         op = wl.op(i)
+        op.cpu = tree_cpu_s() - c0
         op.rss = sample_rss()
         op.index = i
         ops.append(op)
@@ -290,15 +340,18 @@ def _spread(vals: list[float]) -> str:
     return f"{quartile_spread(vals):.4f}"
 
 
-def end_to_end(wl, ops, setup_times, peak_mb) -> dict[str, tuple[float, str]]:
+def end_to_end(wl, ops, setup_times, setup_cpu, peak_mb) -> dict[str, tuple[float, str]]:
     """Every end-to-end metric for the run, name -> (value, unit)."""
     from perfbench.stats import tail_percentile
 
     walls = [o.wall for o in ops]
     rates = [o.rows / o.wall for o in ops]
     out = {
-        "setup_s": (statistics.median(setup_times), "s"),
+        "setup_s": (statistics.median(setup_cpu), "s"),
+        "setup_wall_s": (statistics.median(setup_times), "s"),
         "setup_cold_s": (setup_times[0], "s"),
+        "op_cpu_s_p50": (statistics.median(o.cpu for o in ops), "s"),
+        "rows_per_cpu_s": (statistics.median(o.rows / o.cpu for o in ops), "rows/cpu-s"),
         "op_s_p50": (statistics.median(walls), "s"),
         "rows_per_s": (statistics.median(rates), "rows/s"),
         "peak_rss_mb": (peak_mb, "MB"),

@@ -14,6 +14,9 @@ import csv
 import gzip
 import hashlib
 import os
+import subprocess
+import sys
+import time
 
 import pytest
 
@@ -86,6 +89,28 @@ def test_self_time_with_overlapping_children():
     assert stats.self_time(0.0, 10.0, []) == pytest.approx(10.0)
     assert stats.self_time(0.0, 10.0, [(2.0, 3.0), (2.0, 3.0)]) == pytest.approx(9.0)
     assert stats.union_length([(0, 1), (0.5, 2), (5, 6)]) == pytest.approx(3.0)
+
+
+def test_tree_cpu_counts_live_and_exited_descendants():
+    from perfbench.run import tree_cpu_s
+
+    burn = "import time\nt = time.process_time()\nwhile time.process_time() - t < 0.4: pass\n"
+    before = tree_cpu_s()
+    # a child that runs a grandchild to completion, then burns itself:
+    # measured while the child is still alive
+    child = subprocess.Popen([
+        sys.executable, "-c",
+        f"import subprocess, sys; subprocess.run([sys.executable, '-c', {burn!r}]); "
+        f"exec({burn!r}); sys.stdin.read()",
+    ], stdin=subprocess.PIPE)
+    try:
+        deadline = time.monotonic() + 20
+        while tree_cpu_s() - before < 0.7 and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert tree_cpu_s() - before >= 0.7
+    finally:
+        child.communicate(b"")
+    assert tree_cpu_s() - before >= 0.7  # now through our cumulative fields
 
 
 def _fake_sink(wl: BackfillBulk, out_root: str) -> str:

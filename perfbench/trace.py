@@ -64,6 +64,9 @@ ENTRY_POINTS = (
     ("openaq_lcs_fetch_spark.streaming.pipeline", "dedup_then_hourly_counts", "streaming.dedup_then_hourly_counts"),
     ("openaq_lcs_fetch_spark.streaming.pipeline", "stream_state_partitions", "streaming.stream_state_partitions"),
     ("openaq_lcs_fetch_spark.streaming.pipeline", "run_available_now", "streaming.run_available_now"),
+    # the registry's streaming queries bind these names at import
+    ("openaq_lcs_fetch_spark.plans.streaming_q", "stream_state_partitions", "streaming.stream_state_partitions"),
+    ("openaq_lcs_fetch_spark.plans.streaming_q", "run_available_now", "streaming.run_available_now"),
 )
 
 
@@ -457,7 +460,9 @@ def layer_metrics(spans, jobs, progress, ops, base_ops, setup_parts, isolated):
     for r in traced_runs:
         gap = 0.0
         for s in spans:
-            if s.run == r and s.name.startswith("plans."):
+            # batch queries only: a streaming query's micro-batch jobs are
+            # submitted from the stream's own thread, outside the span's group
+            if s.run == r and s.name.startswith("plans.") and s.name not in REPLAY_SPANS:
                 js = sub_jobs(s)
                 gap += dur(s) - union_length((max(j["start"], s.start), min(j["end"], s.end)) for j in js)
         gaps.append(gap)
