@@ -1,37 +1,38 @@
-"""Right-sized construction for small driver-side DataFrames.
+"""Driver-side rows → DataFrame without a Python worker.
 
-``SparkSession.createDataFrame(rows)`` parallelizes local rows into
-``defaultParallelism`` slices (32 on the bench harness, mostly empty
-for a dim of a few rows). Every action on such a frame then pays one
-Python-worker round trip PER SLICE to deserialize a handful of rows —
-measured ~0.15-0.25 s of fixed cost per action at local[32] (guide §4:
-the JVM↔Python boundary is paid per partition), and the same 32 tasks
-serialize behind each other at lower core counts. For the engine's
-dimension/spec/fixture frames — re-evaluated by every job that builds
-a broadcast or a sink write from them — that is pure overhead: one
-slice is strictly better at any core count and any cluster size, so
-this is NOT a local[32]-only tune.
+``SparkSession.createDataFrame(rows)`` pickles the rows into a
+``parallelize`` RDD: every action on the frame then starts a Python
+task per slice just to unpickle a handful of rows, ~0.2 CPU-s of fixed
+cost each before the first row (worker fork plus its import-cache
+refresh). The engine's dimension, spec and fixture frames are read by
+every job that broadcasts or writes from them, so that cost repeats.
 
-``local_df`` keeps the exact ``createDataFrame`` conversion semantics
-(the rows travel through the same ``schema.toInternal`` machinery —
-only the slice count changes), and scales the slice count back up for
-genuinely large driver-side collections (the bounded-HTTP control
-reads) so a big page buffer still parallelizes.
+``local_df`` converts the rows on the driver into an Arrow table with
+pyspark's own ``LocalDataToArrowConversion`` (the converter Spark
+Connect uses for local rows: naive timestamps are read as host-local
+time, exactly as ``TimestampType.toInternal`` reads them) and hands the
+table to ``createDataFrame``, which ships the Arrow batches to the JVM.
+The resulting frame is a JVM-only scan: no ``PythonRDD`` in its lineage
+at any size, so there is no slice count to tune.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-#: rows per slice before a second slice is worth a second Python-worker
-#: round trip — far above every dim/spec/fixture in the engine.
-_ROWS_PER_SLICE = 4096
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """``createDataFrame`` for small driver-side row lists without the
-    defaultParallelism slice fan-out (see module docstring)."""
+    """``createDataFrame(rows, schema)`` built in the JVM from an Arrow
+    table (see module docstring). ``schema`` is a ``StructType`` or a
+    DDL string such as ``"k int, v string"``."""
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
     data = rows if isinstance(rows, list) else list(rows)
-    sc = spark.sparkContext
-    slices = max(1, min(sc.defaultParallelism, len(data) // _ROWS_PER_SLICE))
-    return spark.createDataFrame(sc.parallelize(data, slices), schema)
+    if data:
+        table = LocalDataToArrowConversion.convert(data, schema, False)
+    else:
+        table = to_arrow_schema(schema).empty_table()
+    return spark.createDataFrame(table, schema)

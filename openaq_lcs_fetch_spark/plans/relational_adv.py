@@ -1414,25 +1414,21 @@ _TRIANGLES_MIN_SUPPORT = 2
 #: shuffled join instead of OOMing the driver (r14 verdict item #3;
 #: guide §3.1 — broadcast only a side you know fits).
 _NODE_BCAST_MAX_ROWS = 8_000_000  # ≈ 400 MB hashed: inside every budget
-_NODE_COUNT_CACHE: dict[str, int | None] = {}  # metadata only, never rows
 
 
 def _graph_node_broadcaster(sf_dir: str):
     """``F.broadcast`` when the part catalog provably fits the broadcast
-    budget, else identity (the joins stay correct shuffled)."""
+    budget, else identity (the joins stay correct shuffled). The footer
+    is read on every call (metadata only, never rows), so a catalog
+    rewritten in place is never judged by a stale count."""
     import os
 
-    key = os.path.realpath(sf_dir)
-    if key not in _NODE_COUNT_CACHE:
-        try:
-            import pyarrow.parquet as pq
+    try:
+        import pyarrow.parquet as pq
 
-            _NODE_COUNT_CACHE[key] = pq.ParquetFile(
-                os.path.join(sf_dir, "part.parquet")
-            ).metadata.num_rows
-        except Exception:
-            _NODE_COUNT_CACHE[key] = None  # unknown size: cannot prove fit
-    n = _NODE_COUNT_CACHE[key]
+        n = pq.ParquetFile(os.path.join(sf_dir, "part.parquet")).metadata.num_rows
+    except Exception:
+        n = None  # unknown size: cannot prove fit
     if n is not None and n <= _NODE_BCAST_MAX_ROWS:
         return F.broadcast
     return lambda df: df

@@ -31,7 +31,10 @@ class Provider(ABC):
     """config in → (measures, stations) DataFrames out.
 
     measures schema: MEASUREMENT_FLAGGED (schemas.py); stations schema:
-    STATION. Both are *plans* — nothing executes until a sink runs.
+    STATION. Both are *plans* — nothing executes until a sink runs —
+    except where both derive from one remote fetch: then ``process``
+    fetches once, eagerly (``localCheckpoint``, as ``MobileProvider``
+    does), so the two sinks read the same pages.
     """
 
     name: str = "abstract"

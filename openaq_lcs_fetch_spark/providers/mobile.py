@@ -86,6 +86,10 @@ class MobileProvider(Provider):
                 .select(*raw.columns)
             )
         ts = from_unix_seconds(F.col("unix_ts"))
+        # one fetch per run: measures and stations both read the
+        # checkpointed pages, so each page is requested once (a live
+        # API cannot serve the two sinks different pages) and the
+        # Python DataSource runs one read, not one per sink
         bounded = raw.withColumn("timestamp", ts).filter(
             time_range(
                 F.col("timestamp"),
@@ -93,7 +97,7 @@ class MobileProvider(Provider):
                 end=meta.get("end"),
                 drop_future_after=meta.get("now"),
             )
-        )
+        ).localCheckpoint()
         measures = bounded.select(
             sensor_id(F.lit(source_label(config)), F.col("session_id"), F.col("param")).alias(
                 "sensor_id"

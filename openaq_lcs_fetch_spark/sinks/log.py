@@ -2,32 +2,32 @@
 
 The reference publishes a per-run summary to SNS (providers.js:59-71,
 called from fetcher/index.js:29-34 with 'fetcher/success' or
-'fetcher/error'). Here: a structured log row appended to a parquet
-status table — queryable, and a `foreachBatch` can emit the same row
-per micro-batch in streaming mode.
+'fetcher/error'). Here: one row per run in a parquet status table.
+
+``publish`` writes that row on the driver with pyarrow, one file per
+call (a hidden temp file, then ``os.replace`` to ``part-<uuid>.parquet``,
+as ``CheckpointStore.save`` does): no Spark job, and no ``_temporary``
+staging dir shared between the scheduler's concurrent publishes, so no
+lock. Timestamps are ``timestamp[us, tz=UTC]``, which Spark reads as
+``TimestampType`` alongside older Spark-written files of the table.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
-import threading
+import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-from ..localdf import local_df
-
-#: the run log is the ONE sink shared by concurrently-running sources
-#: (scheduler.run_tick overlaps them): concurrent appends to a single
-#: parquet path race on the shared ``_temporary`` staging dir (one
-#: job's commit/cleanup can delete the other's in-flight files), so the
-#: tiny 1-row append itself is serialized. Everything else in a source
-#: run touches per-source paths and overlaps freely.
-_PUBLISH_LOCK = threading.Lock()
-
-LOG_SCHEMA = (
-    "run_ts timestamp, source string, status string, n_measures long, "
-    "from_ts timestamp, to_ts timestamp, message string"
-)
+_UTC = _dt.timezone.utc
+_TS = pa.timestamp("us", tz="UTC")
+LOG_SCHEMA = pa.schema([
+    ("run_ts", _TS), ("source", pa.string()), ("status", pa.string()),
+    ("n_measures", pa.int64()), ("from_ts", _TS), ("to_ts", _TS), ("message", pa.string()),
+])
 
 
 def publish(
@@ -40,22 +40,17 @@ def publish(
     to_ts=None,
     message: str = "",
 ) -> None:
-    row = [
-        (
-            _dt.datetime.now(tz=_dt.timezone.utc).replace(tzinfo=None),
-            source,
-            status,
-            n_measures,
-            from_ts,
-            to_ts,
-            message,
-        )
-    ]
-    # one slice → one task and ONE parquet file per published row (the
-    # default 32-slice parallelize wrote 32 files per row, 31 empty —
-    # slower to write and slower for every readback to list)
-    with _PUBLISH_LOCK:
-        local_df(spark, row, LOG_SCHEMA).write.mode("append").parquet(log_path)
+    """Append one run row (``spark`` is unused; it keeps the sink
+    signature). A naive ``from_ts`` / ``to_ts`` is host-local time, as a
+    Spark collect returns it."""
+    ts = [None if t is None else t.astimezone(_UTC) for t in (from_ts, to_ts)]
+    row = dict(zip(LOG_SCHEMA.names, (
+        _dt.datetime.now(_UTC), source, status, n_measures, *ts, message)))
+    os.makedirs(log_path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(log_path, f".{name}.tmp")  # dot: hidden from readers
+    pq.write_table(pa.Table.from_pylist([row], schema=LOG_SCHEMA), tmp)
+    os.replace(tmp, os.path.join(log_path, name))
 
 
 def summarize(measures: DataFrame, source: str) -> dict:

@@ -104,9 +104,13 @@ def diff_upsert(
     # metrics (CollectMetrics) instead of a localCheckpoint job + a
     # separate aggregate job — the incoming plan (and the md5 hashing
     # above it) is evaluated exactly ONCE, inside the write action.
-    # Observed metrics are exact on success (only successful tasks
-    # contribute), and the crash-safety ordering is untouched: same
-    # staged write, same rename swap.
+    # Failed tasks do not contribute to observed metrics, but a
+    # stage retry (fetch-failure re-execution) or a speculative task
+    # can count its rows twice on a cluster, so written / skipped /
+    # total may overcount there (exact in local mode). They are only
+    # reported; the max-based high-water mark is unaffected. The
+    # crash-safety ordering is untouched: same staged write, same
+    # rename swap.
     obs_new = Observation()
     marked = hashed_new.join(
         existing.select(key, "content_hash")

@@ -134,3 +134,17 @@ def flaky_readings(options: dict, page: int) -> list[tuple]:
             fh.write(str(n + 1))
         raise ConnectionError(f"synthetic transient failure #{n + 1} page {page}")
     return synthetic_readings(options, page)
+
+
+def counted_sessions(options: dict, page: int) -> list[tuple]:
+    """providers.mobile.mobile_sessions plus a call trail: appends one
+    line per call to ``counter_dir/page_<n>`` (the file outlives the
+    executor worker), so the driver can count how often each page was
+    fetched."""
+    import os
+
+    from ..providers.mobile import mobile_sessions
+
+    with open(os.path.join(options["counter_dir"], f"page_{page}"), "a") as fh:
+        fh.write("1\n")
+    return mobile_sessions(options, page)

@@ -344,8 +344,13 @@ def run_available_now(
         .outputMode(output_mode)
         .trigger(availableNow=True)
     )
-    if state_partitions is not None:
-        with _CONF_BRACKET_LOCK:
+    # an unpinned start takes the lock too: it clones the session's
+    # conf, and must not clone it while another thread's bracket has
+    # the partitions lowered
+    with _CONF_BRACKET_LOCK:
+        if state_partitions is None:
+            q = writer.start()
+        else:
             saved = spark.conf.get("spark.sql.shuffle.partitions")
             spark.conf.set(
                 "spark.sql.shuffle.partitions", str(state_partitions)
@@ -354,8 +359,6 @@ def run_available_now(
                 q = writer.start()  # the stream clones the session HERE
             finally:
                 spark.conf.set("spark.sql.shuffle.partitions", saved)
-    else:
-        q = writer.start()
     q.awaitTermination()
     if output_mode == "complete":
         # complete mode re-emits the FULL result each batch (the memory

@@ -556,15 +556,17 @@ def test_wilson_is_single_aggregation(spark, sf_dir):
 
 
 def test_bpe_final_plan_is_checkpoint_flat(spark, sf_dir):
-    """bpe_train_merges' output plan is one local 1-slice frame of the
-    driver-collected per-round argmax winners (r14: the winning pair is
-    ONE row per round, so it is taken to the driver instead of paying a
-    checkpoint job + broadcast exchange per round): the corpus pass and
-    all vocabulary-sized round work happened inside per-round
-    localCheckpoints, so the final plan reads no parquet at all."""
+    """bpe_train_merges' output plan is one local driver-built frame
+    (``local_df``: a LocalTableScan) of the driver-collected per-round
+    argmax winners (r14: the winning pair is ONE row per round, so it is
+    taken to the driver instead of paying a checkpoint job + broadcast
+    exchange per round): the corpus pass and all vocabulary-sized round
+    work happened inside per-round localCheckpoints, so the final plan
+    reads no parquet and no checkpoint at all."""
     tree = _plan(spark, sf_dir, "bpe_train_merges").split("\n\n")[0]
     assert tree.count("Scan parquet") == 0
-    assert tree.count("Scan ExistingRDD") == 1
+    assert tree.count("Scan ExistingRDD") == 0
+    assert tree.count("LocalTableScan") == 1
 
 
 def test_kaplan_meier_fold_is_life_table_bounded_and_guarded(spark, sf_dir):
@@ -865,6 +867,24 @@ def test_df_capped_vacuous_join_pins_parallelism(spark, sf_dir):
             name,
             sh_exchanges,
         )
+
+
+def test_graph_node_gate_sees_a_grown_catalog(tmp_path, monkeypatch):
+    """The gate's footer-count cache is keyed by the file's identity
+    (path, mtime, size): a part catalog rewritten in place with more
+    rows than the budget closes the gate in the same session."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from openaq_lcs_fetch_spark.plans import relational_adv as RA
+
+    monkeypatch.setattr(RA, "_NODE_BCAST_MAX_ROWS", 5)
+    part = tmp_path / "part.parquet"
+    pq.write_table(pa.table({"p_partkey": list(range(3))}), part)
+    assert RA._graph_node_broadcaster(str(tmp_path)) is F.broadcast
+    pq.write_table(pa.table({"p_partkey": list(range(50))}), part)
+    assert RA._graph_node_broadcaster(str(tmp_path)) is not F.broadcast
 
 
 def test_graph_node_broadcasts_are_size_gated(spark, sf_dir):

@@ -226,3 +226,38 @@ def test_enriched_provider(spark, tmp_path):
     # J2 miss side-output: the unknown datasource surfaces exactly once
     assert [r.datasource_id for r in misses.collect()] == ["ds-unknown"]
     assert stations.count() == 1
+
+
+@pytest.mark.parametrize("dry_run", [False, True])
+def test_mobile_fetches_each_page_once_per_run(spark, tmp_path, monkeypatch, dry_run):
+    """Measures and stations derive from one fetch: every page is
+    requested exactly once per run_source, real run or dry run (they
+    used to be fetched once per sink, and a live API could serve the
+    two sinks different pages)."""
+    import functools
+
+    from openaq_lcs_fetch_spark.engine import Engine
+    from openaq_lcs_fetch_spark.providers import mobile
+    from openaq_lcs_fetch_spark.sources import http
+
+    counter_dir = tmp_path / "calls"
+    counter_dir.mkdir()
+    # the counting fetcher's directory rides in as a DataSource option
+    monkeypatch.setattr(
+        mobile,
+        "read_paginated",
+        functools.partial(http.read_paginated, counter_dir=str(counter_dir)),
+    )
+    cfg = {
+        "schema": "v1", "provider": "mobile", "frequency": "minute", "active": True,
+        "meta": {
+            "pages": "3", "page_size": "8", "source_name": "counted",
+            "fetcher": "openaq_lcs_fetch_spark.sources.fetchers:counted_sessions",
+            "lookup": [["pm25", "pm25", "µg/m³"], ["rh", "relativehumidity", "%"]],
+            "incremental": True,
+        },
+    }
+    log = Engine(spark).run_source(cfg, str(tmp_path / "out"), dry_run=dry_run)
+    assert log["n_measures"] == 24 and log["n_stations"] == 3
+    calls = {p.name: p.read_text().count("\n") for p in counter_dir.iterdir()}
+    assert calls == {"page_0": 1, "page_1": 1, "page_2": 1}

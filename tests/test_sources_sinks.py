@@ -3,6 +3,7 @@ measures sinks, diff-upsert station registry."""
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import gzip
 import json
@@ -1661,3 +1662,159 @@ def test_file_int_spans_rejects_non_integer_logical_types(spark, tmp_path):
     assert per_col["s16"] == (0, 9)  # true small-int: logical INT accepted
     for c in ("d9", "d18", "dt", "ts"):
         assert per_col[c] == (None, None), c  # unknown -> always scanned
+
+
+@contextlib.contextmanager
+def _host_tz(name):
+    """Run the block under process TZ ``name``; restore it after."""
+    import time
+
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = name
+    time.tzset()
+    try:
+        yield
+    finally:
+        if old is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+
+
+def test_local_df_matches_create_dataframe_without_python_rdd(spark):
+    """local_df builds its frame in the JVM from an Arrow table: its
+    rows equal createDataFrame's (naive timestamps read as host-local
+    time, aware ones as their instant) and its lineage never holds a
+    PythonRDD, at any size. Under a driver-only TZ switch the reference
+    is createDataFrame over the list, which converts on the driver; a
+    parallelized RDD converts in the Python workers, whose TZ is the
+    one the JVM was launched with, so it is compared in that TZ."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from openaq_lcs_fetch_spark.localdf import local_df
+
+    schema = (
+        "k long, ts timestamp, m map<string,string>, a array<long>, "
+        "d decimal(10,3), s string, f double, b boolean"
+    )
+    naive = dt.datetime(2024, 6, 1, 12, 30, 0, 123456)
+    aware = dt.datetime(2024, 1, 15, 8, 0, tzinfo=dt.timezone(dt.timedelta(hours=5)))
+    small = [
+        (1, naive, {"a": "x"}, [1, 2], Decimal("1.250"), "s", 1.5, True),
+        (2, aware, None, None, None, None, None, None),
+        (3, None, {}, [], Decimal("-3.1"), "", -0.0, False),
+    ]
+    big = [
+        (i, naive + dt.timedelta(minutes=i), {"k": str(i)}, [i],
+         Decimal(i) / 8, str(i), i / 3, i % 2 == 0)
+        for i in range(5000)  # > 4096 rows: the old code split slices here
+    ]
+    sc = spark.sparkContext
+
+    def same(got, want, n):
+        assert got.schema == want.schema
+        assert sorted(got.collect()) == sorted(want.collect()), n
+        lineage = got._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, lineage
+
+    for data in (small, [], big):
+        same(local_df(spark, data, schema),
+             spark.createDataFrame(sc.parallelize(data), schema), len(data))
+    with _host_tz("America/New_York"):
+        for data in (small, [], big):
+            same(local_df(spark, data, schema),
+                 spark.createDataFrame(data, schema), len(data))
+        # the instant, not just the collect round trip: naive is New York
+        (us,) = local_df(spark, [(naive,)], "ts timestamp").selectExpr(
+            "unix_micros(ts)"
+        ).first()
+    edt = dt.timezone(dt.timedelta(hours=-4))
+    assert us == int(naive.replace(tzinfo=edt).timestamp() * 1e6)
+    # the parallelize path does carry one, so the assertion can fail
+    old = spark.createDataFrame(sc.parallelize(small), schema)
+    assert "PythonRDD" in old._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_publish_runs_no_spark_job_and_needs_no_lock(spark, tmp_path):
+    """publish writes its row driver-side: zero Spark jobs, one file per
+    call, so concurrent publishes cannot collide; rows written by the
+    older Spark-append writer read back in the same table."""
+    import datetime as dt
+    import threading
+
+    from pyspark.sql.types import TimestampType
+
+    from openaq_lcs_fetch_spark.sinks.log import publish
+
+    log_path = str(tmp_path / "runlog")
+    sc = spark.sparkContext
+    group = f"publish-probe-{os.getpid()}"
+    sc.setJobGroup(group, "publish must not start jobs")
+    try:
+        publish(spark, log_path, "solo", "fetcher/success", n_measures=3)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        # a file written the way the run log used to be appended to
+        spark.createDataFrame(
+            [(dt.datetime(2024, 1, 1), "old", "fetcher/success", 1, None, None, "")],
+            "run_ts timestamp, source string, status string, n_measures long, "
+            "from_ts timestamp, to_ts timestamp, message string",
+        ).coalesce(1).write.mode("append").parquet(log_path)
+        assert sc.statusTracker().getJobIdsForGroup(group)  # the probe sees jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    import sys
+
+    barrier = threading.Barrier(8)  # more publishers than local cores
+
+    def _one(i):
+        barrier.wait(timeout=60)
+        publish(spark, log_path, f"src{i}", "fetcher/success", n_measures=i)
+
+    threads = [threading.Thread(target=_one, args=(i,)) for i in range(8)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+
+    back = spark.read.parquet(log_path)
+    assert isinstance(back.schema["run_ts"].dataType, TimestampType)
+    assert isinstance(back.schema["from_ts"].dataType, TimestampType)
+    rows = {r.source: r.n_measures for r in back.collect()}
+    assert rows == {"solo": 3, "old": 1, **{f"src{i}": i for i in range(8)}}
+    assert not [f for f in os.listdir(log_path) if f.endswith(".tmp")]
+
+
+def test_publish_run_ts_is_utc_under_non_utc_host_tz(spark, tmp_path):
+    """run_ts is the real UTC instant of the publish whatever the host
+    TZ (it used to be a naive UTC wall time that createDataFrame read
+    as host-local: 4 h ahead under New York summer time). A naive
+    from_ts keeps its host-local reading, as a Spark collect returns
+    it."""
+    import datetime as dt
+    import time
+
+    from openaq_lcs_fetch_spark.sinks.log import publish
+
+    log_path = str(tmp_path / "runlog")
+    from_ts = dt.datetime(2024, 6, 1, 8, 0)  # New York local (EDT, UTC-4)
+    with _host_tz("America/New_York"):
+        before = int(time.time() * 1e6)
+        publish(spark, log_path, "tz", "fetcher/success", from_ts=from_ts)
+        after = int(time.time() * 1e6)
+        row = spark.read.parquet(log_path).selectExpr(
+            "unix_micros(run_ts) AS run_us", "unix_micros(from_ts) AS from_us",
+            "from_ts",
+        ).first()
+    assert before <= row.run_us <= after
+    assert row.from_us == int(dt.datetime(2024, 6, 1, 12, 0, tzinfo=dt.timezone.utc).timestamp() * 1e6)
+    assert row.from_ts == from_ts  # collected under New York again
