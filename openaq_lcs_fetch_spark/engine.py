@@ -8,11 +8,11 @@ streaming flavor of the same pipelines lives in streaming/.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime as _dt, timezone as _timezone
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import tables
@@ -52,16 +52,17 @@ class Engine:
         """One bounded ingestion run for one source (the reference's
         Lambda invocation, fetcher/index.js:12-35). Returns the run log.
 
-        dry_run short-circuits the sinks (reference DRYRUN,
-        providers.js:151-155) and reports would-be outputs. Sink paths
-        key on the source name (meta.source_name) like the reference's
-        {STACK}/measures/{provider}/ layout.
+        dry_run swaps the sinks for Spark's noop sink and a station count
+        (reference DRYRUN, providers.js:151-155) and reports would-be
+        outputs. Sink paths key on the source name (meta.source_name)
+        like the reference's {STACK}/measures/{provider}/ layout.
         """
         from .config import resolve_paths, source_label
         from .sources.secrets import merge_secret
 
         config = merge_secret(resolve_paths(config, data_root))
         provider = source_label(config)
+        meta = config.get("meta", {})
         try:
             measures, stations = processor(self.spark, config)
 
@@ -70,7 +71,6 @@ class Engine:
             # `since` default, cmu.js:56-61). A plain ts comparison →
             # pushdown-eligible; re-runs over the same feed emit nothing.
             # Applies in dry-run too, so previewed counts match a real run.
-            meta = config.get("meta", {})
             if meta.get("incremental") in (True, "true", "1"):
                 ck = CheckpointStore(out_root).load(provider)
                 measures = measures.filter(
@@ -79,159 +79,51 @@ class Engine:
                     )
                 )
 
-            from concurrent.futures import ThreadPoolExecutor
-
+            # the run counters and the checkpoint mark ride the measures
+            # write as observed metrics, taken BEFORE the sinks' null
+            # filter; a dry run writes the same plan to Spark's noop sink
+            measures, obs = summarize(measures)
             if dry_run:
-                # the measures summary and the station count are
-                # independent read-only aggregates over different
-                # frames — overlap them so the second job's tasks
-                # back-fill the first one's tail (guide §2.6). Error
-                # precedence matches the sequential code: a summarize
-                # failure surfaces first.
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    f_sum = pool.submit(summarize, measures, provider)
-                    f_cnt = pool.submit(stations.count)
-                    sum_exc = cnt_exc = None
-                    try:
-                        log = f_sum.result()
-                    except Exception as e:
-                        sum_exc = e
-                    try:
-                        n_stations = f_cnt.result()
-                    except Exception as e:
-                        cnt_exc = e
-                if sum_exc is not None:
-                    raise sum_exc
-                if cnt_exc is not None:
-                    raise cnt_exc
-                log.pop("_hwm", None)
-                log["n_stations"] = n_stations
-                log["status"] = "dry-run"
+                write_m = (measures.write.format("noop").mode("overwrite").save,)
+                write_s = (stations.count,)
+            else:
+                landed = measures.filter("measure IS NOT NULL")
+                if meta.get("sink", "csv") == "json":
+                    write_m = (_write_json, landed, stations, out_root, provider)
+                else:
+                    write_m = (write_measures_csv, landed, out_root, provider)
+                write_s = (
+                    diff_upsert, self.spark, stations,
+                    f"{out_root}/stations/{provider}", "sensor_node_id",
+                )
+
+            # the two writes touch disjoint per-provider paths, so they
+            # overlap (guide §2.6). Reading the measures result first
+            # keeps the error order "measures, then stations", and the
+            # pool's exit waits for both before anything below runs: a
+            # failed run never advances the checkpoint.
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                f_m, f_s = pool.submit(*write_m), pool.submit(*write_s)
+                measures_path = f_m.result()
+                stations_out = f_s.result()
+            row = obs.get
+            log = {
+                "source": provider,
+                "n_measures": row["n"],
+                "from_ts": row["from_ts"],
+                "to_ts": row["to_ts"],
+            }
+            if dry_run:
+                log.update(n_stations=stations_out, status="dry-run")
                 return log
-
-            sink_kind = config.get("meta", {}).get("sink", "csv")
-
-            # r15 (guide §1.2/§4; r14 verdict task #2 — fuse the sink
-            # writes with their counters): in a REAL run the summary
-            # counters RIDE THE MEASURES SINK WRITE as observed metrics
-            # (CollectMetrics on the exact frame summarize() read —
-            # BEFORE the sink's measure-IS-NOT-NULL filter), and the
-            # station count falls out of diff_upsert's own observed
-            # counters (written + skipped == the incoming station
-            # count) — zero standalone pre-sink aggregation jobs. The
-            # JSON sink keeps the standalone summary (assemble_v01
-            # references the measures subtree from two branches, and an
-            # observation node may appear only once per query), but
-            # submits it into the SAME pool so it overlaps the sinks.
-            obs = None
-            if sink_kind != "json":
-                obs = Observation()
-                measures = measures.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.min("timestamp").alias("from_ts"),
-                    F.max("timestamp").alias("to_ts"),
-                    F.date_format(
-                        F.max("timestamp"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-                    ).alias("hwm"),
-                )
-
-            def _measures_sink() -> str:
-                if sink_kind == "json":
-                    locations = stations.selectExpr(
-                        "sensor_node_id AS location",
-                        "coalesce(sensor_node_site_name, sensor_node_id) AS label"
-                        if "sensor_node_site_name" in stations.columns
-                        else "sensor_node_id AS label",
-                        "sensor_node_ismobile AS ismobile",
-                        "sensor_node_geometry[0] AS lon"
-                        if "sensor_node_geometry" in stations.columns
-                        else "CAST(NULL AS DOUBLE) AS lon",
-                        "sensor_node_geometry[1] AS lat"
-                        if "sensor_node_geometry" in stations.columns
-                        else "CAST(NULL AS DOUBLE) AS lat",
-                    )
-                    payload = assemble_v01(
-                        measures.filter("measure IS NOT NULL"),
-                        locations,
-                        provider,
-                        # the run date anchors the envelope when a batch
-                        # has zero measures (one envelope per batch)
-                        default_day=_dt.now(_timezone.utc).strftime("%Y-%m-%d"),
-                    )
-                    return write_measures_json(payload, out_root, provider)
-                return write_measures_csv(
-                    measures.filter("measure IS NOT NULL"), out_root, provider
-                )
-
-            # the measures sink and the station upsert write DISJOINT
-            # per-provider paths — overlap them too (same §2.6 shape,
-            # same sequential error precedence: summary first, then
-            # measures sink, then upsert). The checkpoint advance and
-            # the run-log publish stay strictly AFTER both sinks — a
-            # crash mid-run must never leave an advanced checkpoint
-            # pointing past unwritten data.
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                f_sum = (
-                    pool.submit(summarize, measures, provider)
-                    if obs is None
-                    else None
-                )
-                f_m = pool.submit(_measures_sink)
-                f_u = pool.submit(
-                    diff_upsert,
-                    self.spark,
-                    stations,
-                    f"{out_root}/stations/{provider}",
-                    "sensor_node_id",
-                )
-                s_exc = m_exc = u_exc = None
-                log = hwm_pre = None
-                if f_sum is not None:
-                    try:
-                        log = f_sum.result()
-                        hwm_pre = log.pop("_hwm", None)
-                    except Exception as e:
-                        s_exc = e
-                try:
-                    measures_path = f_m.result()
-                except Exception as e:
-                    m_exc = e
-                try:
-                    upsert_counts = f_u.result()
-                except Exception as e:
-                    u_exc = e
-            if s_exc is not None:
-                raise s_exc
-            if m_exc is not None:
-                raise m_exc
-            if u_exc is not None:
-                raise u_exc
-            if obs is not None:
-                # the summary counters observed on the sink write —
-                # same single-pass aggregate summarize() ran, zero
-                # extra evaluations of the provider plan
-                row = obs.get
-                log = {
-                    "source": provider,
-                    "n_measures": row["n"],
-                    "from_ts": row["from_ts"],
-                    "to_ts": row["to_ts"],
-                }
-                hwm_pre = row["hwm"]
-            log["n_stations"] = (
-                upsert_counts["written"] + upsert_counts["skipped_unchanged"]
+            log.update(
+                # every incoming station is either written or skipped
+                n_stations=stations_out["written"] + stations_out["skipped_unchanged"],
+                measures_path=measures_path,
+                stations=stations_out,
+                checkpoint=advance(CheckpointStore(out_root), provider, row["hwm"]),
+                status="fetcher/success",
             )
-            log["measures_path"] = measures_path
-            log["stations"] = upsert_counts
-            store = CheckpointStore(out_root)
-            # the summary pass already computed the checkpoint-format
-            # mark over this very frame — advance() skips its own
-            # full-plan aggregation (one fewer evaluation per run)
-            log["checkpoint"] = advance(
-                store, provider, measures, "timestamp", hwm=hwm_pre
-            )
-            log["status"] = "fetcher/success"
             publish(
                 self.spark,
                 f"{out_root}/runlog",
@@ -252,3 +144,36 @@ class Engine:
             except Exception:
                 pass
             raise
+
+
+def _write_json(landed: DataFrame, stations: DataFrame, out_root: str, provider: str) -> str:
+    """K2: the v0.1 envelopes of one batch, written by day.
+
+    The observed rows are materialized first, in one provider pass:
+    ``assemble_v01`` reads them from two join branches, and on an empty
+    batch adaptive execution prunes both branches, so the run summary's
+    observation would never be reported."""
+    landed = landed.localCheckpoint()
+    cols = stations.columns
+    locations = stations.selectExpr(
+        "sensor_node_id AS location",
+        "coalesce(sensor_node_site_name, sensor_node_id) AS label"
+        if "sensor_node_site_name" in cols
+        else "sensor_node_id AS label",
+        "sensor_node_ismobile AS ismobile",
+        "sensor_node_geometry[0] AS lon"
+        if "sensor_node_geometry" in cols
+        else "CAST(NULL AS DOUBLE) AS lon",
+        "sensor_node_geometry[1] AS lat"
+        if "sensor_node_geometry" in cols
+        else "CAST(NULL AS DOUBLE) AS lat",
+    )
+    payload = assemble_v01(
+        landed,
+        locations,
+        provider,
+        # the run date anchors the envelope when a batch has zero
+        # measures (one envelope per batch)
+        default_day=_dt.now(_timezone.utc).strftime("%Y-%m-%d"),
+    )
+    return write_measures_json(payload, out_root, provider)

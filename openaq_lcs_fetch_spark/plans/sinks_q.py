@@ -37,7 +37,12 @@ from pyspark.sql import functions as F
 from ..functions.ids import sensor_id
 from ..sinks.measures import assemble_v01, write_measures_csv, write_measures_json
 from ..sinks.stations import diff_upsert
-from ..sources.checkpoint import CheckpointStore, advance, incremental_predicate
+from ..sources.checkpoint import (
+    CheckpointStore,
+    advance,
+    high_water_mark,
+    incremental_predicate,
+)
 from ..localdf import local_df
 from .registry import query, t
 
@@ -277,12 +282,12 @@ def checkpoint_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         store = CheckpointStore(root)
         run1 = e.filter(F.col("event_id") % 2 == 0)
-        ck1 = advance(store, "events", run1, "ts")
+        ck1 = advance(store, "events", high_water_mark(run1, "ts"))
         loaded = store.load("events")  # the reload a real run performs
         incremental = e.filter(
             incremental_predicate(F.col("ts"), loaded, "1970-01-01")
         )
-        ck2 = advance(store, "events", incremental, "ts")
+        ck2 = advance(store, "events", high_water_mark(incremental, "ts"))
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return incremental.agg(
@@ -298,9 +303,10 @@ def checkpoint_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # run_log_roundtrip — K5 run-log sink + A3 run summaries (reference
 # providers.js:59-71 SNS publish from fetcher/index.js:29-34;
 # clarity.js:192-208 summary counters). One run per event_type plays
-# one run per source: summarize() computes the reference's counters,
-# publish() appends the structured row to the parquet status table,
-# and the readback — run_ts dropped, it is wall-clock by contract —
+# one run per source: one grouped aggregate computes the counters
+# that summarize() observes on a real run's sink write, publish()
+# appends the structured row to the parquet status table, and the
+# readback — run_ts dropped, it is wall-clock by contract —
 # must reproduce every counter exactly. Proves the log table is a
 # faithful, queryable record of what each run processed.
 # ---------------------------------------------------------------------------
@@ -331,11 +337,10 @@ def run_log_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").alias("timestamp"),
         )
     )
-    # r15 (guide §1.2): ONE grouped aggregate computes every source's
-    # run counters — the exact per-source numbers summarize() produced
-    # one filtered full scan at a time (count / min ts / max ts over
-    # the same rows; 6 jobs -> 1). The log WRITES stay one publish()
-    # per source — the sink behavior under test is unchanged.
+    # ONE grouped aggregate computes every source's run counters — the
+    # count / min ts / max ts that summarize() observes per source (one
+    # job for all sources). The log WRITES stay one publish() per
+    # source — the sink behavior under test.
     summaries = (
         e.groupBy("event_type")
         .agg(

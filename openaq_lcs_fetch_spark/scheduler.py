@@ -77,7 +77,8 @@ def run_tick(
 
     Due sources within one tick are independent by construction (each
     owns its measures/stations/checkpoint paths; the one shared sink,
-    the run log, serializes its append internally — sinks/log.py), so
+    the run log, takes one new file per publish, so appends need no
+    lock — sinks/log.py), so
     they overlap on a small thread pool: Spark happily runs several
     jobs at once, and the next source's tasks back-fill the cores the
     current source's tail leaves idle (guide §2.6). Ticks themselves

@@ -20,7 +20,10 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+
+from ..sources.checkpoint import hwm_expr
 
 _UTC = _dt.timezone.utc
 _TS = pa.timestamp("us", tz="UTC")
@@ -53,30 +56,18 @@ def publish(
     os.replace(tmp, os.path.join(log_path, name))
 
 
-def summarize(measures: DataFrame, source: str) -> dict:
-    """A3: the reference's summary() counters (clarity.js:192-208).
-
-    The ``_hwm`` key is the checkpoint-format high-water mark computed
-    in the SAME single-pass aggregate (engine-side ``date_format``
-    under the pinned UTC session tz — the exact formatting
-    ``sources.checkpoint.high_water_mark`` performs, for the exact
-    reason documented there): ``Engine.run_source`` hands it to
-    ``advance`` so the checkpoint does not re-evaluate the whole
-    provider plan a second time just to recompute max(timestamp)."""
-    from pyspark.sql import functions as F
-
-    row = measures.agg(
+def summarize(measures: DataFrame) -> tuple[DataFrame, Observation]:
+    """A3: the reference's summary() counters (clarity.js:192-208),
+    attached to ``measures`` as an ``Observation`` (``n``, ``from_ts``,
+    ``to_ts``, and ``hwm``, the checkpoint mark of ``advance``). Starts
+    no Spark job: the counters arrive with the first action on the
+    returned frame, the sink write, so the provider plan runs once."""
+    obs = Observation()
+    observed = measures.observe(
+        obs,
         F.count(F.lit(1)).alias("n"),
         F.min("timestamp").alias("from_ts"),
         F.max("timestamp").alias("to_ts"),
-        F.date_format(
-            F.max("timestamp"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-        ).alias("hwm"),
-    ).collect()[0]
-    return {
-        "source": source,
-        "n_measures": row["n"],
-        "from_ts": row["from_ts"],
-        "to_ts": row["to_ts"],
-        "_hwm": row["hwm"],
-    }
+        hwm_expr("timestamp").alias("hwm"),
+    )
+    return observed, obs

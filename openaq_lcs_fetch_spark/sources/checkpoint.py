@@ -60,8 +60,10 @@ def incremental_predicate(ts: Column, checkpoint: dict | None, default_since: st
     return ts > F.lit(since)
 
 
-def high_water_mark(df: DataFrame, ts_col: str) -> str | None:
-    """A2: max timestamp of the processed batch (greatestTimestamp).
+def hwm_expr(ts_col: str) -> Column:
+    """A2: the checkpoint-format max timestamp (greatestTimestamp) as an
+    aggregate expression, so a caller can compute it inside a pass it
+    already makes (``sinks.log.summarize`` observes it on the sink write).
 
     Formatted ENGINE-side under the session timezone (UTC, pinned in
     session.RUNTIME_CONF): collecting the raw timestamp would hand back
@@ -72,10 +74,13 @@ def high_water_mark(df: DataFrame, ts_col: str) -> str | None:
     the vacuum's footer-span reads fixed. Always emits microseconds so
     marks of the same format compare lexicographically in :func:`advance`.
     """
-    row = df.agg(
-        F.date_format(F.max(ts_col), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("hwm")
-    ).collect()[0]
-    return row["hwm"]
+    return F.date_format(F.max(ts_col), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
+
+
+def high_water_mark(df: DataFrame, ts_col: str) -> str | None:
+    """The :func:`hwm_expr` of a whole frame, in its own aggregate job
+    (``None`` for an empty frame)."""
+    return df.agg(hwm_expr(ts_col).alias("hwm")).collect()[0]["hwm"]
 
 
 #: how far AHEAD of the current batch a stored mark may sit before
@@ -97,15 +102,12 @@ def _naive_utc(dt: datetime.datetime) -> datetime.datetime:
     return dt
 
 
-def advance(
-    store: CheckpointStore,
-    source: str,
-    df: DataFrame,
-    ts_col: str,
-    hwm: str | None = None,
-) -> dict[str, Any]:
-    """Save the new high-water mark after a successful run; never moves
-    backwards (late re-reads must not regress the checkpoint).
+def advance(store: CheckpointStore, source: str, hwm: str | None) -> dict[str, Any]:
+    """Save the new high-water mark ``hwm`` (a :func:`hwm_expr`-format
+    string, or ``None`` for an empty batch, which keeps the stored mark)
+    after a successful run; never moves backwards (late re-reads must
+    not regress the checkpoint). A caller holding only a frame passes
+    ``high_water_mark(df, ts_col)``.
 
     Migration note: a store written by the PRE-TZ-fix
     ``high_water_mark`` on a host east of UTC holds a future-shifted
@@ -119,16 +121,8 @@ def advance(
     detectable at runtime: a stored mark more than that far AHEAD of
     the batch high-water mark warns (a mark slightly ahead is normal
     under partial re-reads; hours ahead is the documented TZ-shift
-    signature or a clock problem — either way worth a look).
-
-    ``hwm`` lets a caller that ALREADY aggregated the batch (e.g.
-    ``sinks.log.summarize``, which computes the identically-formatted
-    mark in its single pass) skip the extra full-plan evaluation; it
-    must be the ``high_water_mark``-format string over the same
-    ``(df, ts_col)``."""
+    signature or a clock problem — either way worth a look)."""
     prev = store.load(source) or {}
-    if hwm is None:
-        hwm = high_water_mark(df, ts_col)
     stored = prev.get("high_water_mark", "")
     if hwm is not None and stored:
         try:

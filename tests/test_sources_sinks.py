@@ -23,6 +23,7 @@ from openaq_lcs_fetch_spark.sinks.stations import content_hash, diff_upsert
 from openaq_lcs_fetch_spark.sources.checkpoint import (
     CheckpointStore,
     advance,
+    high_water_mark,
     incremental_predicate,
 )
 from openaq_lcs_fetch_spark.sources.http import (
@@ -106,7 +107,7 @@ def test_checkpoint_roundtrip(spark, tmp_path):
         [("a", "2024-01-01T05:00:00"), ("b", "2024-01-02T00:00:00")],
         "id string, ts string",
     ).withColumn("ts", F.to_timestamp("ts"))
-    state = advance(store, "src", df, "ts")
+    state = advance(store, "src", high_water_mark(df, "ts"))
     assert state["high_water_mark"].startswith("2024-01-02")
     # incremental predicate excludes already-seen rows
     remaining = df.filter(incremental_predicate(F.col("ts"), store.load("src"), "1970-01-01"))
@@ -119,7 +120,7 @@ def test_checkpoint_roundtrip(spark, tmp_path):
         "ts", F.to_timestamp("ts")
     )
     with pytest.warns(UserWarning, match="ahead of the batch"):
-        state2 = advance(store, "src", older, "ts")
+        state2 = advance(store, "src", high_water_mark(older, "ts"))
     assert state2["high_water_mark"].startswith("2024-01-02")
     # a batch only slightly behind the mark (normal partial re-read:
     # within SUSPECT_MARK_GAP) must NOT warn
@@ -128,7 +129,7 @@ def test_checkpoint_roundtrip(spark, tmp_path):
     ).withColumn("ts", F.to_timestamp("ts"))
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        state3 = advance(store, "src", slightly_older, "ts")
+        state3 = advance(store, "src", high_water_mark(slightly_older, "ts"))
     assert state3["high_water_mark"].startswith("2024-01-02")
 
 
